@@ -49,9 +49,9 @@ object SparkEntry {
   /** Housekeeping for the pid-keyed scratch dirs (ADVICE.md r04): without
    * it every JVM run leaks one small dir per (sf dir, stream source) into
    * java.io.tmpdir. Two belts: a shutdown hook deletes THIS pid's dirs, and
-   * before each write we prune `graft_*_p<pid>` dirs whose owning pid is no
-   * longer alive (covers kill -9'd bench children whose hooks never ran).
-   * Registered lazily once per JVM. */
+   * once per JVM we prune `graft_*_p<pid>` dirs whose owning pid is not alive
+   * (kill -9'd bench children) and that are older than a day: a live owner
+   * in another PID namespace sharing the tmpdir looks dead to this JVM. */
   private lazy val streamScratchHousekeeping: Unit = {
     def rmTree(p: java.io.File): Unit = {
       if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rmTree))
@@ -65,9 +65,11 @@ object SparkEntry {
           rmTree(f)
       })))
     val deadPid = "^graft_.*_p(\\d+)$".r
+    val minAgeMs = 24L * 60 * 60 * 1000 // longer than any one run
     Option(tmp.listFiles()).foreach(_.foreach { f =>
       f.getName match {
         case deadPid(pid) if pid.toLong != myPid &&
+          System.currentTimeMillis() - f.lastModified() > minAgeMs &&
           !ProcessHandle.of(pid.toLong).map[Boolean](_.isAlive).orElse(false) =>
           rmTree(f)
         case _ => ()

@@ -61,22 +61,22 @@ class SnapshotStore(val root: String) {
     max
   }
 
-  /** Range-partition by cell and write one table + its lineage rows.
+  /** Range-partition by cell and write one table + its lineage rows;
+   * returns the written checkpoint and its row count.
    *
-   * The partitioned frame is materialized ONCE (localCheckpoint) before
-   * the write and the lineage aggregation read it: a second execution
-   * would re-sample RangePartitioner bounds (seeded per RDD), so the
-   * lineage could describe partition ranges that differ from the files
-   * actually written — and the whole upstream plan would run twice
-   * (review finding). Lineage lands under lineage/stage=<table> with
-   * OVERWRITE, so a crash-resume re-run of an uncommitted seq replaces
-   * its own stage's rows instead of appending stale duplicates next to
-   * them (review finding); readers see `stage` as a partition column. */
+   * `df` is materialized ONCE, by the checkpoint below, which the data and
+   * lineage writes both read: a second execution would re-sample
+   * RangePartitioner bounds (seeded per RDD), so the lineage could describe
+   * ranges other than the files written. The row count sums the lineage's
+   * `row_count`s, i.e. the rows written; an `Observation` on `df` would
+   * over-count, as the partitioner's sampling job runs `df`'s plan too.
+   * Lineage lands under lineage/stage=<table> with OVERWRITE, so a
+   * crash-resume re-run of an uncommitted seq replaces its own stage's rows
+   * (review finding); readers see `stage` as a partition column. */
   def writeTable(df: DataFrame, seq: Long, table: String, cellCol: String,
-                 partitions: Int): Unit = {
+                 partitions: Int): (DataFrame, Long) = {
     val dir = s"${seqDir(seq)}/$table"
     val parted = df.repartitionByRange(partitions, col(cellCol)).localCheckpoint()
-    parted.write.mode("overwrite").parquet(dir)
     val lineage = parted
       .groupBy(spark_partition_id().as("partition_id"))
       .agg(
@@ -84,8 +84,11 @@ class SnapshotStore(val root: String) {
         max(col(cellCol)).as("cell_hi"),
         count(lit(1)).as("row_count"))
       .withColumn("applied_seq", lit(seq))
-    lineage.write.mode("overwrite")
-      .parquet(s"${seqDir(seq)}/lineage/stage=$table")
+    val lineageRows = lineage.collect()
+    parted.write.mode("overwrite").parquet(dir)
+    parted.sparkSession.createDataFrame(java.util.Arrays.asList(lineageRows: _*), lineage.schema)
+      .coalesce(1).write.mode("overwrite").parquet(s"${seqDir(seq)}/lineage/stage=$table")
+    (parted, lineageRows.map(_.getAs[Long]("row_count")).sum)
   }
 
   /** A6: per-sequence statistics rows (kind, name, value, applied_seq) from
@@ -156,8 +159,14 @@ object UpdateJob {
    * [[graft.streaming.ChangeStream.ingest]]. One code path is what makes
    * "streaming and batch semantics cannot drift" TRUE rather than an
    * aspiration: ingest previously re-implemented this loop without the
-   * dirty-way rebuild, run statistics, or the Observation-riding row count
-   * (review finding).
+   * dirty-way rebuild, run statistics, or the MERGE cross-check (review
+   * finding).
+   *
+   * Each sequence's state is built once: the lazy `compacted` plan (change
+   * scan, classify, dedup window) is checkpointed first and everything
+   * below reads that; the merged snapshot goes straight to
+   * [[SnapshotStore.writeTable]], whose checkpoint is its only
+   * materialization and whose written row count feeds the MERGE check.
    *
    * @param compacted  classified + last-writer-wins-compacted rows of `seq`
    * @param beforeRows row count of `snapshot` (carried across seqs so no
@@ -168,8 +177,9 @@ object UpdateJob {
       stats: RunStatistics, seq: Long, compacted: DataFrame,
       snapshot0: DataFrame, wayMembers: DataFrame, beforeRows: Long,
       cellRes: Int, partitions: Int): (DataFrame, Long) = {
-    stats.time("classify")(stats.countBatch(compacted))
-    val nodeBatch = compacted.filter(col("obj_type") === "node")
+    val batch = stats.time("classify")(compacted.localCheckpoint())
+    stats.time("classify")(stats.countBatch(batch))
+    val nodeBatch = batch.filter(col("obj_type") === "node")
       .select(col("id"), col("action"), col("lon"), col("lat"))
 
     // dependency closure against the PRE-merge snapshot: locationDiff
@@ -179,46 +189,28 @@ object UpdateJob {
     // referencing ways before applying the batch,
     // src/osm/OsmChangeHandler.cpp:96-117)
     val (dirtyWays, _) = stats.time("closure")(ChangeBatch.dependencyClosure(
-      compacted, snapshot0, wayMembers, emptyRelMembers(spark)))
+      batch, snapshot0, wayMembers, emptyRelMembers(spark)))
 
     // expected MERGE effect — the reference's QLever-reported
     // insert/delete counts, computed store-side here
     val (expDeleted, expUpserted) =
       stats.time("merge_expect")(DeltaApply.mergeMetrics(snapshot0, nodeBatch))
-    // actual row count rides a CollectMetrics observation on the
-    // checkpoint action (no extra job); count() only as fallback
-    val obs = org.apache.spark.sql.Observation(s"merge-$seq")
-    val snapshot = stats.time("merge")(
-      DeltaApply.applyChangeBatch(snapshot0, nodeBatch)
-        .select("id", "lon", "lat")
-        .observe(obs, count(lit(1)).as("rows"))
-        .localCheckpoint(true)) // cut lineage: each seq builds on materialized state
-    val afterRows = try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration._
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // Observation.get blocks until a Dataset action reports metrics;
-      // guard with a timeout in case the checkpoint materialization
-      // bypasses the listener, and fall back to a (cheap) count of the
-      // checkpointed snapshot.
-      Await.result(Future(obs.get), 10.seconds)
-        .get("rows").map(_.asInstanceOf[Long]).getOrElse(snapshot.count())
-    } catch { case _: java.util.concurrent.TimeoutException => snapshot.count() }
+    // the MERGE is materialized by the node_geoms write itself
+    val merged = DeltaApply.applyChangeBatch(snapshot0, nodeBatch).select("id", "lon", "lat")
+      .withColumn("cell", cell_encode(col("lon"), col("lat"), lit(cellRes)))
+    val (written, afterRows) = stats.time("merge")(
+      store.writeTable(merged, seq, "node_geoms", "cell", partitions))
     stats.crossCheckMerge(seq, beforeRows, afterRows, expDeleted, expUpserted)
+    val snapshot = written.select("id", "lon", "lat")
 
     // dirty-geometry recompute, scoped to affected ways only; member
     // coords come from the POST-merge snapshot (new locations)
     val dirtyMembers = wayMembers.join(dirtyWays.hint("broadcast"), Seq("way_id"), "left_semi")
     val rebuiltGeoms = GeometryBuild.buildWayGeoms(dirtyMembers, snapshot, withDerived = false)
       .withColumn("cell", cell_encode(st_x(col("wkt")), st_y(col("wkt")), lit(cellRes)))
-
-    val snapCells = snapshot.withColumn("cell",
-      cell_encode(col("lon"), col("lat"), lit(cellRes)))
-    stats.time("write") {
-      store.writeTable(snapCells, seq, "node_geoms", "cell", partitions)
-      store.writeTable(rebuiltGeoms, seq, "dirty_way_geoms", "cell", partitions)
-      store.writeStats(stats.toDF(seq), seq)
-    }
+    stats.time("write")(store.writeTable(rebuiltGeoms, seq, "dirty_way_geoms", "cell", partitions))
+    // after the write phase closed, so its time is in the committed stats
+    store.writeStats(stats.toDF(seq), seq)
     store.commit(seq)
     (snapshot, afterRows)
   }

@@ -15,8 +15,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * consumed src/osm/OsmChangeHandler.cpp:414-418).
  *
  * Spark vehicles, chosen to avoid perturbing the measured plans:
- *  - row counts of pipeline outputs ride `Dataset.observe` (CollectMetrics
- *    operators — no extra actions, no plan barrier);
+ *  - the merged snapshot's row count is the sum of the per-partition
+ *    lineage counts of its one write (SnapshotStore.writeTable) — no extra
+ *    pass over the data;
  *  - per-action wall/plan timings come from a QueryExecutionListener
  *    attached for the lifetime of the run, attributed to the phase during
  *    which the action STARTED (an interval log makes this robust to the

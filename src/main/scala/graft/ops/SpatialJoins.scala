@@ -118,8 +118,9 @@ object SpatialJoins {
    *        job of pure fixed driver latency. CORRECTNESS-load-bearing, not
    *        advisory: it decides whether the brute backstop for queries with
    *        fewer than k in-ring candidates runs at all, so an UNDER-count
-   *        silently drops those queries from the result (review finding).
-   *        Pass None (default) unless the count is exact.
+   *        drops those queries from the result (review finding); a hint
+   *        below the queries the proof pass already saw throws. Pass None
+   *        (default) unless the count is exact.
    */
   def knnJoin(queries: DataFrame, targets: DataFrame, k: Int,
               levels: Seq[Int] = Seq(20, 18, 16, 14, 12, 10, 8, 6),
@@ -498,6 +499,9 @@ object SpatialJoins {
       (if (r.isNullAt(0)) 0L else r.getLong(0),
        if (r.isNullAt(1)) 0L else r.getLong(1))
     }
+    require(nQueriesTotal >= nProven + nNeeds,
+      s"knnJoin: queryCountHint=$nQueriesTotal is below the $nProven proven + " +
+        s"$nNeeds round-2 queries already found; pass the exact query count or None")
     val nRemaining = nQueriesTotal - nProven - nNeeds
     if (dbg) System.err.println(
       s"[knn] queries=$nQueriesTotal proven=$nProven round2=$nNeeds brute=$nRemaining")

@@ -110,6 +110,51 @@ class CheckpointSpec extends AnyFunSuite {
     }
     // listener captured at least one action timing
     assert(stats.exists(_._1 == "action_ns"))
+
+    // a single-sequence run commits its own write time too
+    val store0 = new SnapshotStore(Files.createTempDirectory("graft-stats0").toString)
+    UpdateJob.run(spark, store0, changes, nodeGeoms, wayMembers, 0, 0)
+    val phases0 = store0.readStats(spark, 0).filter($"kind" === "phase_ms")
+      .select("name").as[String].collect().toSet
+    assert(phases0.contains("write"), s"phase_ms:write not committed: $phases0")
+  }
+
+  test("each sequence evaluates its change input once") {
+    val evals = spark.sparkContext.longAccumulator("change rows evaluated")
+    val counted = udf { (_: Long) => evals.add(1); true }.asNondeterministic()
+    // one branch per seq with `seq` a literal, like a per-sequence change
+    // file: the seq filter prunes the other branches, so the counting filter
+    // sees only the applied seq's rows, once per evaluation of its plan
+    val perSeq = (0L to 3L).map { s =>
+      val rows = changes.filter($"seq" === s).drop("seq")
+      spark.createDataFrame(rows.rdd, rows.schema)
+        .filter(counted($"eid")).withColumn("seq", lit(s))
+    }.reduce(_ unionByName _)
+    val store = new SnapshotStore(Files.createTempDirectory("graft-once").toString)
+    UpdateJob.run(spark, store, perSeq, nodeGeoms, wayMembers, 0, 1)
+    assert(store.watermark() === Some(1L))
+    assert(evals.value === changes.filter($"seq" <= 1).count())
+  }
+
+  test("MERGE cross-check throws on a wrong row count; the watermark stays") {
+    val store = new SnapshotStore(Files.createTempDirectory("graft-xcheck").toString)
+    UpdateJob.run(spark, store, changes, nodeGeoms, wayMembers, 0, 0)
+    val snap = store.readTable(spark, 0, "node_geoms").select("id", "lon", "lat")
+    val before = snap.count()
+    def apply1(beforeRows: Long) = {
+      val compacted = graft.ops.ChangeBatch.dedupLatestVersion(
+        graft.ops.ChangeBatch.classify(changes.filter($"seq" === 1)))
+      val stats = new RunStatistics(spark)
+      try UpdateJob.applySeq(spark, store, stats, 1, compacted, snap, wayMembers,
+        beforeRows, cellRes = 12, partitions = 8)
+      finally stats.close()
+    }
+    val e = intercept[IllegalArgumentException](apply1(before + 1))
+    assert(e.getMessage.contains("MERGE count cross-check failed"))
+    assert(store.watermark() === Some(0L))
+    // the same call with the true count commits
+    apply1(before)
+    assert(store.watermark() === Some(1L))
   }
 
   test("uncommitted sequence directory is not treated as a watermark") {

@@ -47,6 +47,18 @@ class SpatialJoinsSpec extends AnyFunSuite {
     }
   }
 
+  test("knnJoin rejects an under-counting queryCountHint") {
+    val targets = (0 until 100).map(i => (i.toLong, (i % 10) * 0.01, (i / 10) * 0.01))
+      .toDF("pid", "lon", "lat")
+    val queries = Seq((1L, 0.02, 0.02), (2L, 0.05, 0.05), (3L, 0.07, 0.03))
+      .toDF("qid", "qlon", "qlat")
+    val e = intercept[IllegalArgumentException](
+      SpatialJoins.knnJoin(queries, targets, k = 3, queryCountHint = Some(2L)))
+    assert(e.getMessage.contains("queryCountHint=2"))
+    // the exact hint runs
+    assert(SpatialJoins.knnJoin(queries, targets, k = 3, queryCountHint = Some(3L)).count() === 9)
+  }
+
   test("knnJoin deep co-located stack (forces the gated dedup path) stays exact") {
     // 200 points stacked on ONE coordinate: finest-cell occupancy 200 >
     // proofFactor*k = 32*3 = 96, so prepareKnnTargets takes the stack-dedup
